@@ -49,7 +49,7 @@ def main(argv: list[str] | None = None) -> int:
         "--telemetry",
         action="store_true",
         help="print per-batch progress telemetry (rows, rate, state "
-        "size) after the run",
+        "size, state rows updated) after the run",
     )
     s.add_argument(
         "--duration",
@@ -160,7 +160,7 @@ def main(argv: list[str] | None = None) -> int:
         from pyspark.sql import functions as F
 
         from .sources import load_events_stream
-        from .streaming.pipeline import top_k_per_window, windowed_counts
+        from .streaming.pipeline import windowed_counts
         from .streaming.sink import make_topk_file_sink
 
         events = load_events_stream(spark, args.sf_dir).select(
@@ -186,12 +186,16 @@ def main(argv: list[str] | None = None) -> int:
         query.awaitTermination(timeout=600)
         print(f"stream replay complete; latest window written to {args.out}")
         if rec is not None:
-            rec.wait_for(1)
+            # Progress events arrive asynchronously: wait for every
+            # batch's, then detach so none lands after the process exits.
+            rec.wait_for(len(query.recentProgress))
+            telemetry.detach(spark, rec)
             for r in rec.records:
                 print(
                     f"batch {r['batch_id']}: {r['input_rows']} rows, "
                     f"{r['rows_per_sec']:.0f} rows/s, "
-                    f"state {r['state_rows']} rows"
+                    f"state {r['state_rows']} rows, "
+                    f"{r['state_rows_updated']} updated"
                 )
             print(rec.summary())
         return 0

@@ -16,7 +16,7 @@ from __future__ import annotations
 import json
 import os
 import tempfile
-from datetime import datetime, timezone
+from datetime import datetime, timedelta, timezone
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -60,110 +60,66 @@ def write_result_file(path: str, payload: str) -> None:
 
 
 class TopKFileSink:
-    """foreachBatch hook writing the trailing full-window top-k.
+    """foreachBatch hook writing the top-k of the trailing window,
+    rolled up from `windowed_counts` pane rows (pipeline.py).
 
-    Two correctness requirements drive the design (both found in the
-    round-1 review):
+    * **Trailing window.** The pane width is ``w.end − w.start`` and
+      the window length ``window_ms``, both read from the data. With
+      boundary ``max(pane start) + pane width``, the document covers
+      ``[boundary − window, boundary)`` — the trailing 15 minutes of
+      ``reduceByKeyAndWindow(Minutes(15))`` (SparkApplication.scala:88):
+      per key the sum of those panes' counts and the min of their casing.
+    * **Delta merge.** In update output mode a micro-batch carries only
+      the changed (pane, key) rows, each with its full pane count; the
+      cache replaces those entries, so a key with no new events keeps
+      its count.
 
-    * **Window selection.** With a sliding window (window > slide) the
-      row set contains ~window/slide concurrent windows. ``max(w.start)``
-      is the window that just OPENED — it holds only the last ~slide of
-      events. The reference's ``reduceByKeyAndWindow(Minutes(15))``
-      (SparkApplication.scala:88) reports the TRAILING 15 minutes: the
-      window with the greatest ``w.end`` that is ≤ the current slide
-      boundary. The boundary is inferred from the data as
-      ``max(w.start) + slide`` (the newest window's start is the
-      slide-grid floor of the newest event time).
-
-    * **Delta merge.** In update output mode each micro-batch carries
-      only the (window, key) rows whose counts changed this trigger; a
-      key with no new events would silently drop out of the top-k. The
-      sink therefore merges deltas into a per-window count cache across
-      triggers and computes the top-k over the merged view — the same
-      full-window counts the reference recomputes each batch.
-
-    Scale envelope: the cache holds the latest count per (live window,
-    key) — O(window/slide × |distinct keys in window|), the same state
-    the reference retained as ~90 windowed RDDs, and strictly smaller
-    than complete output mode (which disables watermark eviction and
-    replays ALL windows every trigger). Windows whose end has passed
-    the slide boundary are evicted. Per-trigger driver traffic is the
-    delta row set, already bounded by the state-store update volume.
+    Scale envelope: the cache holds O(window/slide × distinct keys per
+    pane); panes starting before ``boundary − window`` are evicted.
+    Per-trigger driver traffic is the pane delta, and the rollup a plain
+    sum over at most window/slide dicts. The cache lives in driver
+    memory only: after a restart from a checkpoint it starts empty, so
+    the document undercounts until one full window has passed.
     """
 
-    def __init__(self, path: str, k: int = 5, slide_seconds: float | None = None):
+    def __init__(self, path: str, k: int = 5):
         self.path = path
         self.k = k
-        self.slide_seconds = slide_seconds
-        # (window_start, window_end) -> {key -> (count, display_hashtag)}
-        self._windows: dict[tuple, dict[str, tuple[int, str]]] = {}
-
-    def _infer_slide(self) -> float | None:
-        if self.slide_seconds is not None:
-            return self.slide_seconds
-        starts = sorted({s for (s, _e) in self._windows})
-        if len(starts) >= 2:
-            return min(
-                (b - a).total_seconds() for a, b in zip(starts, starts[1:])
-            )
-        if starts:  # single window seen: tumbling, slide == duration
-            s, e = next(iter(self._windows))
-            return (e - s).total_seconds()
-        return None
+        # pane_start -> {key -> (count, display_hashtag)}
+        self._panes: dict[datetime, dict[str, tuple[int, str]]] = {}
+        self._width = self._window = None
 
     def __call__(self, batch_df: DataFrame, epoch_id: int) -> None:
         rows = batch_df.select(
-            F.col("w.start").alias("ws"),
-            F.col("w.end").alias("we"),
-            "key",
-            "count",
-            "hashtag",
+            F.col("w.start").alias("ps"), F.col("w.end").alias("pe"),
+            "window_ms", "key", "count", "hashtag",
         ).collect()
-        if not rows and not self._windows:
-            return
         for r in rows:
-            self._windows.setdefault((r["ws"], r["we"]), {})[r["key"]] = (
-                int(r["count"]),
-                r["hashtag"],
-            )
-        slide = self._infer_slide()
-        if slide is None:
+            self._panes.setdefault(r["ps"], {})[r["key"]] = (
+                int(r["count"]), r["hashtag"])
+        if rows:
+            self._width = rows[0]["pe"] - rows[0]["ps"]
+            self._window = timedelta(milliseconds=rows[0]["window_ms"])
+        if not self._panes:
             return
-        from datetime import timedelta
-
-        boundary = max(s for (s, _e) in self._windows) + timedelta(
-            seconds=slide
-        )
-        complete = [we for (_ws, we) in self._windows if we <= boundary]
-        if not complete:
-            # All live windows still open (can happen on a replay whose
-            # first batch spans < one slide): keep the last good file.
-            return
-        trailing_end = max(complete)
-        trailing = max(
-            (w for w in self._windows if w[1] == trailing_end),
-            key=lambda w: w[0],
-        )
-        counts = self._windows[trailing]
-        # Evict windows fully in the past — state stays O(window/slide).
-        self._windows = {
-            w: c for w, c in self._windows.items() if w[1] >= trailing_end
-        }
-        top = sorted(
-            (
-                {"count": n, "hashtag": disp, "key": key}
-                for key, (n, disp) in counts.items()
-            ),
-            key=lambda r: (-r["count"], r["key"]),
-        )[: self.k]
-        write_result_file(self.path, render_document(top))
+        lo = max(self._panes) + self._width - self._window
+        self._panes = {p: c for p, c in self._panes.items() if p >= lo}
+        counts: dict[str, tuple[int, str]] = {}
+        for pane in self._panes.values():
+            for key, (n, disp) in pane.items():
+                m, d = counts.get(key, (0, disp))
+                counts[key] = (m + n, min(d, disp))
+        top = sorted(counts.items(), key=lambda kv: (-kv[1][0], kv[0]))
+        write_result_file(self.path, render_document(
+            {"count": n, "hashtag": disp} for _key, (n, disp) in top[: self.k]
+        ))
 
 
-def make_topk_file_sink(path: str, k: int = 5, slide_seconds: float | None = None):
-    """foreachBatch hook: emit the top-k of the trailing complete window
-    each trigger ≙ the reference's per-batch foreachRDD(save)
+def make_topk_file_sink(path: str, k: int = 5):
+    """foreachBatch hook: emit the top-k of the trailing window each
+    trigger ≙ the reference's per-batch foreachRDD(save)
     (SparkApplication.scala:92-95). See TopKFileSink for semantics."""
-    return TopKFileSink(path, k=k, slide_seconds=slide_seconds)
+    return TopKFileSink(path, k=k)
 
 
 class IdempotentParquetSink:

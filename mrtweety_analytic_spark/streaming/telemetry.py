@@ -45,6 +45,8 @@ class ProgressRecorder(StreamingQueryListener):
             "rows_per_sec": p.processedRowsPerSecond,
             "batch_duration_ms": (p.durationMs or {}).get("triggerExecution"),
             "state_rows": sum(s.numRowsTotal for s in state) if state else 0,
+            "state_rows_updated": sum(s.numRowsUpdated for s in state)
+            if state else 0,
         }
         with self._lock:
             self.records.append(rec)

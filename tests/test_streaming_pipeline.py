@@ -75,6 +75,33 @@ def test_batch_pipeline_golden(spark):
     assert display["spark"] == "SPARK"  # min of {Spark, SPARK, spark}
 
 
+def test_batch_sliding_window_rolls_up_panes(spark):
+    """window = 3 x slide: top_k_per_window must sum each window's
+    three panes, not rank the panes themselves. Tweets sit at seconds
+    0-7, so panes [0,5) and [5,10) feed windows starting -10, -5, 0, 5."""
+    counts = windowed_counts(
+        blacklist_filter(parse_hashtags(_tweet_df(spark))),
+        window="15 seconds",
+        slide="5 seconds",
+        watermark=None,
+    )
+    got: dict[str, list] = {}
+    for r in top_k_per_window(counts, k=2).select(
+        F.date_format("w.start", "HH:mm:ss").alias("ws"),
+        (F.unix_seconds("w.end") - F.unix_seconds("w.start")).alias("span"),
+        "key", "count", "hashtag",
+    ).collect():
+        assert r["span"] == 15
+        got.setdefault(r["ws"], []).append((r["count"], r["key"], r["hashtag"]))
+    full = [(3, "spark", "SPARK"), (2, "flink", "Flink")]
+    assert {ws: sorted(v, key=lambda t: (-t[0], t[1])) for ws, v in got.items()} == {
+        "23:59:50": [(3, "spark", "SPARK"), (1, "flink", "flink")],
+        "23:59:55": full,
+        "00:00:00": full,
+        "00:00:05": [(1, "flink", "Flink"), (1, "kafka", "kafka")],
+    }
+
+
 def test_stream_equals_batch(spark, tmp_path):
     src = tmp_path / "tweets"
     src.mkdir()
@@ -135,87 +162,89 @@ def test_json_document_contract(spark, tmp_path):
     assert json.loads(out.read_text())["items"] == doc["items"]
 
 
-def _window_rows(spark, rows):
-    """rows: (win_start_str, win_end_str, key, count, hashtag)."""
+def _pane_rows(spark, rows):
+    """rows: (pane_start_str, pane_end_str, key, count, hashtag) — the
+    `windowed_counts` pane contract, for a 15-minute window."""
     df = spark.createDataFrame(
-        rows, "ws string, we string, key string, count long, hashtag string"
+        rows, "ps string, pe string, key string, count long, hashtag string"
     )
     return df.select(
         F.struct(
-            F.col("ws").cast("timestamp").alias("start"),
-            F.col("we").cast("timestamp").alias("end"),
+            F.col("ps").cast("timestamp").alias("start"),
+            F.col("pe").cast("timestamp").alias("end"),
         ).alias("w"),
         "key",
         "count",
         "hashtag",
+        F.lit(15 * 60_000).cast("long").alias("window_ms"),
     )
 
 
 def test_sink_selects_trailing_window_not_newest(spark, tmp_path):
-    """ADVICE r1 (high): with window=15m slide=5m, max(w.start) is the
-    window that just opened (~5 min of data). The document must carry
-    the TRAILING complete window — greatest w.end <= max(w.start)+slide
-    — exactly what reduceByKeyAndWindow(Minutes(15)) reports."""
+    """ADVICE r1 (high): with window=15m slide=5m the newest pane holds
+    only the last ~5 min of events. The document must carry the
+    TRAILING window [boundary - 15m, boundary), boundary = newest pane
+    start + pane width — exactly what reduceByKeyAndWindow(Minutes(15))
+    reports: the sum of its three panes, casing the min over them."""
     out = tmp_path / "analytic.json"
     emit = make_topk_file_sink(str(out), k=5)
-    # Newest event at ~12:14 → windows [11:50,12:05) .. [12:10,12:25).
-    # Trailing complete window is [12:00,12:15): full 15 min of counts.
+    # Newest event at ~12:14 → boundary 12:15, trailing window
+    # [12:00, 12:15); the 11:55 pane lies outside it.
+    d = "2024-01-01 "
     emit(
-        _window_rows(
+        _pane_rows(
             spark,
             [
-                ("2024-01-01 11:50:00", "2024-01-01 12:05:00", "old", 9, "old"),
-                ("2024-01-01 12:00:00", "2024-01-01 12:15:00", "spark", 7, "Spark"),
-                ("2024-01-01 12:00:00", "2024-01-01 12:15:00", "kafka", 4, "kafka"),
-                ("2024-01-01 12:05:00", "2024-01-01 12:20:00", "spark", 3, "Spark"),
-                ("2024-01-01 12:10:00", "2024-01-01 12:25:00", "spark", 1, "Spark"),
+                (d + "11:55:00", d + "12:00:00", "old", 9, "old"),
+                (d + "12:00:00", d + "12:05:00", "spark", 3, "Spark"),
+                (d + "12:00:00", d + "12:05:00", "kafka", 4, "kafka"),
+                (d + "12:05:00", d + "12:10:00", "spark", 3, "Spark"),
+                (d + "12:10:00", d + "12:15:00", "spark", 1, "SPARK"),
             ],
         ),
         epoch_id=0,
     )
     doc = json.loads(out.read_text())
     assert doc["items"] == [
-        {"count": 7, "hashtag": "Spark"},
+        {"count": 7, "hashtag": "SPARK"},
         {"count": 4, "hashtag": "kafka"},
     ]
 
 
 def test_sink_merges_update_mode_deltas_across_triggers(spark, tmp_path):
-    """ADVICE r1 (medium): update mode delivers only changed keys per
-    trigger; keys untouched this trigger must keep their cached counts
-    in the written top-k."""
+    """ADVICE r1 (medium): update mode delivers only changed (pane,
+    key) rows per trigger, each with its full pane count; keys untouched
+    this trigger must keep their cached counts in the written top-k,
+    and a re-emitted pane count replaces (not adds to) the cached one."""
     out = tmp_path / "analytic.json"
     emit = make_topk_file_sink(str(out), k=5)
-    # Trigger 1: spark/kafka events between 11:56 and 12:04 update all
-    # three covering windows (15 m window, 5 m slide).
+    d = "2024-01-01 "
+    # Trigger 1: spark/kafka events between 11:56 and 12:04.
     emit(
-        _window_rows(
+        _pane_rows(
             spark,
             [
-                ("2024-01-01 11:50:00", "2024-01-01 12:05:00", "spark", 2, "Spark"),
-                ("2024-01-01 11:50:00", "2024-01-01 12:05:00", "kafka", 1, "kafka"),
-                ("2024-01-01 11:55:00", "2024-01-01 12:10:00", "spark", 5, "Spark"),
-                ("2024-01-01 11:55:00", "2024-01-01 12:10:00", "kafka", 4, "kafka"),
-                ("2024-01-01 12:00:00", "2024-01-01 12:15:00", "spark", 5, "Spark"),
-                ("2024-01-01 12:00:00", "2024-01-01 12:15:00", "kafka", 4, "kafka"),
+                (d + "11:55:00", d + "12:00:00", "spark", 2, "Spark"),
+                (d + "11:55:00", d + "12:00:00", "kafka", 1, "kafka"),
+                (d + "12:00:00", d + "12:05:00", "spark", 3, "Spark"),
+                (d + "12:00:00", d + "12:05:00", "kafka", 2, "kafka"),
             ],
         ),
         epoch_id=0,
     )
     assert json.loads(out.read_text())["items"] == [
-        {"count": 2, "hashtag": "Spark"},
-        {"count": 1, "hashtag": "kafka"},
+        {"count": 5, "hashtag": "Spark"},
+        {"count": 3, "hashtag": "kafka"},
     ]
-    # Trigger 2: only flink events (at ~12:06) arrive — spark/kafka send
-    # NO delta rows, yet must keep their cached counts in the trailing
-    # window [11:55, 12:10).
+    # Trigger 2: flink events at ~12:06 and one more kafka event in the
+    # 12:00 pane — spark sends NO delta rows, yet must keep its cached
+    # counts in the trailing window [11:55, 12:10).
     emit(
-        _window_rows(
+        _pane_rows(
             spark,
             [
-                ("2024-01-01 11:55:00", "2024-01-01 12:10:00", "flink", 6, "flink"),
-                ("2024-01-01 12:00:00", "2024-01-01 12:15:00", "flink", 6, "flink"),
-                ("2024-01-01 12:05:00", "2024-01-01 12:20:00", "flink", 6, "flink"),
+                (d + "12:00:00", d + "12:05:00", "kafka", 3, "kafka"),
+                (d + "12:05:00", d + "12:10:00", "flink", 6, "flink"),
             ],
         ),
         epoch_id=1,
@@ -231,11 +260,102 @@ def test_sink_merges_update_mode_deltas_across_triggers(spark, tmp_path):
 def test_sink_empty_batch_keeps_last_document(spark, tmp_path):
     out = tmp_path / "analytic.json"
     emit = make_topk_file_sink(str(out), k=5)
-    win = ("2024-01-01 12:00:00", "2024-01-01 12:15:00")
-    emit(_window_rows(spark, [(*win, "spark", 5, "Spark")]), epoch_id=0)
+    pane = ("2024-01-01 12:00:00", "2024-01-01 12:05:00")
+    emit(_pane_rows(spark, [(*pane, "spark", 5, "Spark")]), epoch_id=0)
     first = json.loads(out.read_text())["items"]
-    emit(_window_rows(spark, []), epoch_id=1)  # trailing empty batch
+    emit(_pane_rows(spark, []), epoch_id=1)  # trailing empty batch
     assert json.loads(out.read_text())["items"] == first
+
+
+def test_sliding_stream_keeps_late_rows_and_pane_state(spark, tmp_path):
+    """Four micro-batches (one parquet file each), window = 4 slides,
+    watermark = 1 slide. The last file carries a row at 14 s, older than
+    the 25 s watermark that max event time 35 s set two triggers before
+    (Spark drops rows by the previous trigger's watermark), but inside
+    the trailing window [0 s, 40 s): the document must count it, as the
+    per-window plan did — which needs the pane watermark widened by
+    window - slide. Each trigger must also update at most one state row
+    per distinct (pane, key) of its input, not one per covering window."""
+    import time
+    from datetime import datetime, timedelta, timezone
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from mrtweety_analytic_spark.streaming import telemetry
+
+    slide, window = 10, 40
+    files = [
+        [(5, ["a", "B", "EU"]), (12, ["a"])],
+        [(31, ["b"]), (35, ["c", "A"])],
+        [(38, ["a"])],
+        [(14, ["b"])],
+    ]
+    t0 = datetime(2024, 1, 1, 12, tzinfo=timezone.utc)
+    src = tmp_path / "tweets"
+    src.mkdir()
+    for i, rows in enumerate(files):
+        path = str(src / f"part-{i}.parquet")
+        pq.write_table(pa.table({
+            "value": [
+                json.dumps({"entities": {"hashtags": [{"text": t} for t in tags]}})
+                for _, tags in rows
+            ],
+            "ts": pa.array([t0 + timedelta(seconds=sec) for sec, _ in rows],
+                           pa.timestamp("us", tz="UTC")),
+        }), path)
+        os.utime(path, (time.time() - 100 + i, time.time() - 100 + i))
+
+    def tags_of(rows):
+        return [(sec, t) for sec, tags in rows for t in tags if t.lower() != "eu"]
+
+    # Python recount of the trailing window after every file.
+    all_tags = [x for rows in files for x in tags_of(rows)]
+    boundary = max(sec for sec, _ in all_tags) // slide * slide + slide
+    recount: dict[str, list] = {}
+    for sec, t in all_tags:
+        if boundary - window <= sec < boundary:
+            c = recount.setdefault(t.lower(), [0, t])
+            c[0], c[1] = c[0] + 1, min(c[1], t)
+    ranked = sorted(recount.items(), key=lambda kv: (-kv[1][0], kv[0]))
+    want = [{"count": n, "hashtag": d} for _k, (n, d) in ranked]
+    assert want == [{"count": 4, "hashtag": "A"}, {"count": 3, "hashtag": "B"},
+                    {"count": 1, "hashtag": "c"}]
+
+    raw = (
+        spark.readStream.schema("value string, ts timestamp")
+        .option("maxFilesPerTrigger", "1")
+        .parquet(str(src))
+    )
+    counts = windowed_counts(
+        blacklist_filter(parse_hashtags(raw)),
+        window=f"{window} seconds",
+        slide=f"{slide} seconds",
+        watermark=f"{slide} seconds",
+    )
+    out = tmp_path / "analytic.json"
+    rec = telemetry.attach(spark)
+    try:
+        q = (
+            counts.writeStream.outputMode("update")
+            .foreachBatch(make_topk_file_sink(str(out), k=5))
+            .option("checkpointLocation", str(tmp_path / "ckpt"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        assert q.awaitTermination(timeout=300)
+        deadline = time.time() + 30
+        while rec.summary()["total_input_rows"] < 6 and time.time() < deadline:
+            time.sleep(0.2)
+        data = [r for r in sorted(rec.records, key=lambda r: r["batch_id"])
+                if r["input_rows"]]
+    finally:
+        telemetry.detach(spark, rec)
+    assert json.loads(out.read_text())["items"] == want
+    assert len(data) == len(files)
+    for r, rows in zip(data, files):
+        pairs = {(sec // slide, t.lower()) for sec, t in tags_of(rows)}
+        assert 0 < r["state_rows_updated"] <= len(pairs), (r, pairs)
 
 
 def test_document_byte_shape_matches_reference_sample():
