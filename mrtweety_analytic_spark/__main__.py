@@ -49,7 +49,8 @@ def main(argv: list[str] | None = None) -> int:
         "--telemetry",
         action="store_true",
         help="print per-batch progress telemetry (rows, rate, state "
-        "size, state rows updated) after the run",
+        "size, state rows updated, state stores, state commit time) "
+        "after the run",
     )
     s.add_argument(
         "--duration",
@@ -195,7 +196,9 @@ def main(argv: list[str] | None = None) -> int:
                     f"batch {r['batch_id']}: {r['input_rows']} rows, "
                     f"{r['rows_per_sec']:.0f} rows/s, "
                     f"state {r['state_rows']} rows, "
-                    f"{r['state_rows_updated']} updated"
+                    f"{r['state_rows_updated']} updated, "
+                    f"{r['state_stores']} stores, "
+                    f"commit {r['state_commit_ms']} ms"
                 )
             print(rec.summary())
         return 0

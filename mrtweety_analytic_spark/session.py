@@ -3,9 +3,15 @@
 The reference ran a single-node `local[*]` Spark 2.2 context
 (reference: spark/src/main/scala/.../SparkApplication.scala:34,37).
 Here the session is tuned for the Catalyst/Tungsten path: AQE on,
-shuffle partitions sized for the local test harness (the 100 TB
-deployment overrides via config), UTC session timezone so results
-hash identically against the DuckDB oracle.
+UTC session timezone so results hash identically against the DuckDB
+oracle, and one shuffle-width rule. Batch exchanges are planned at
+AQE's `initialPartitionNum` (32) and coalesced at run time. Streaming
+micro-batches run with AQE off, so a stateful operator's state-store
+count is `spark.sql.shuffle.partitions`, frozen into the checkpoint at
+the query's first start; `tune` sets it to `stream_shuffle_partitions`
+(one store per core). A cluster deployment sets
+`spark.default.parallelism`, which that reads; otherwise it is the
+executor cores registered when `tune` ran.
 """
 
 from __future__ import annotations
@@ -27,10 +33,9 @@ RUNTIME_CONF = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
-    # local[32] harness: 200 default shuffle partitions is wrong for
-    # sub-GB inputs; AQE coalesces down from this anyway. A cluster
-    # deployment sets this (or relies on AQE initialPartitionNum).
-    "spark.sql.shuffle.partitions": "32",
+    # Batch exchanges start at 32 partitions and AQE coalesces them.
+    # Streaming ignores this (see module docstring and `tune`).
+    "spark.sql.adaptive.coalescePartitions.initialPartitionNum": "32",
     # ANSI off: keep permissive SQL semantics matching DuckDB's
     # silent-null behaviours we rely on (e.g. bad JSON -> NULL).
     "spark.sql.ansi.enabled": "false",
@@ -42,9 +47,25 @@ RUNTIME_CONF = {
 }
 
 
+def stream_shuffle_partitions(spark: SparkSession) -> int:
+    """State stores per stateful operator for a new streaming query:
+    `defaultParallelism`, capped at the host's cores on a local master
+    (a `local[N]` session runs at most that many tasks at once)."""
+    sc = spark.sparkContext
+    n = sc.defaultParallelism
+    if sc.master.startswith("local"):
+        n = min(n, os.cpu_count() or n)
+    return n
+
+
 def tune(spark: SparkSession) -> SparkSession:
-    """Apply runtime confs to an existing session (idempotent)."""
-    for k, v in RUNTIME_CONF.items():
+    """Apply runtime confs to an existing session (idempotent), and size
+    the streaming state-store count (`stream_shuffle_partitions`)."""
+    conf = {
+        **RUNTIME_CONF,
+        "spark.sql.shuffle.partitions": str(stream_shuffle_partitions(spark)),
+    }
+    for k, v in conf.items():
         try:
             spark.conf.set(k, v)
         except Exception:

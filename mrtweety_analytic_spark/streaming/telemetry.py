@@ -44,9 +44,10 @@ class ProgressRecorder(StreamingQueryListener):
             "input_rows": p.numInputRows,
             "rows_per_sec": p.processedRowsPerSecond,
             "batch_duration_ms": (p.durationMs or {}).get("triggerExecution"),
-            "state_rows": sum(s.numRowsTotal for s in state) if state else 0,
-            "state_rows_updated": sum(s.numRowsUpdated for s in state)
-            if state else 0,
+            "state_rows": sum(s.numRowsTotal for s in state),
+            "state_rows_updated": sum(s.numRowsUpdated for s in state),
+            "state_stores": sum(s.numStateStoreInstances for s in state),
+            "state_commit_ms": sum(s.commitTimeMs for s in state),
         }
         with self._lock:
             self.records.append(rec)

@@ -369,3 +369,68 @@ def test_restart_decontamination_counters_recovered(spark, tmp_path):
     run2 = {r["source"]: (r["n_docs"], r["n_hit"]) for r in
             _run_complete(spark, agg(), ckpt, "decon_run2")}
     assert run2 == {"s0": (3, 2), "s1": (1, 0)}
+
+
+def test_restart_keeps_checkpointed_state_store_count(spark, sf_dir, tmp_path):
+    """A checkpoint written under an older shuffle width (8) resumes
+    with its own 8 state stores under the session's one-store-per-core
+    default — the offset log's conf wins over the session's — and the
+    pane counts stay exact across the restart. Input: the sf0.001
+    events table, split by time into the first run's file and a file
+    that arrives while the query is down."""
+    from mrtweety_analytic_spark.session import stream_shuffle_partitions, tune
+    from mrtweety_analytic_spark.sources import load_table
+    from mrtweety_analytic_spark.streaming.pipeline import windowed_counts
+
+    events = load_table(spark, sf_dir, "events").select(
+        "ts", F.col("event_type").alias("hashtag")
+    )
+    cut = F.lit("2024-01-15").cast("timestamp")
+    src, ckpt = str(tmp_path / "src"), str(tmp_path / "ckpt")
+
+    def run(name):
+        counts = windowed_counts(
+            spark.readStream.schema(events.schema).parquet(src),
+            window="1 day", slide="6 hours", watermark=None,
+        )
+        q = (
+            counts.writeStream.outputMode("complete")
+            .format("memory")
+            .queryName(name)
+            .option("checkpointLocation", ckpt)
+            .start()
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+            q.awaitTermination()
+        stores = {
+            s.numStateStoreInstances
+            for p in q.recentProgress if p.numInputRows
+            for s in p.stateOperators
+        }
+        rows = {tuple(r) for r in spark.table(name).collect()}
+        spark.catalog.dropTempView(name)
+        return stores, rows
+
+    def expect(df):
+        return {tuple(r) for r in windowed_counts(
+            df, window="1 day", slide="6 hours", watermark=None
+        ).collect()}
+
+    events.where(F.col("ts") < cut).write.parquet(src)
+    spark.conf.set("spark.sql.shuffle.partitions", "8")
+    try:
+        stores1, rows1 = run("store_count_run1")
+    finally:
+        tune(spark)
+    assert stores1 == {8}
+    assert rows1 == expect(events.where(F.col("ts") < cut))
+
+    events.where(F.col("ts") >= cut).write.mode("append").parquet(src)
+    default = stream_shuffle_partitions(spark)
+    assert spark.conf.get("spark.sql.shuffle.partitions") == str(default)
+    stores2, rows2 = run("store_count_run2")
+    assert stores2 == {8}
+    assert rows2 == expect(events)

@@ -245,3 +245,54 @@ def test_cli_export_subcommand(spark, tmp_path):
         .withColumnRenamed("count", "n").collect()
     }
     assert per_shard == {m["shard"]: m["n_docs"] for m in manifest}
+
+
+def test_only_session_sets_shuffle_partitions():
+    """`session.tune` owns `spark.sql.shuffle.partitions` (state stores
+    per core for streaming; batch plans start at AQE's
+    initialPartitionNum). A module that sets it at runtime overrides
+    the rule process-wide and races any other query on the session,
+    so no package module but session.py may set it: no `conf.set(...)`,
+    builder `.config(...)`, conf-dict entry or SQL `SET` of that key.
+    Prose that only mentions the conf is fine."""
+    import pathlib
+    import re
+
+    import mrtweety_analytic_spark as pkg
+
+    key = r"""["']?spark\.sql\.shuffle\.partitions"""
+    setter = re.compile(
+        rf"""\.(?:set|config)\(\s*{key}|{key}["']\s*:|\bSET\s+{key}""",
+        re.IGNORECASE,
+    )
+    root = pathlib.Path(pkg.__file__).parent
+    offenders = [
+        f"{path.relative_to(root)}:{i}"
+        for path in sorted(root.rglob("*.py"))
+        if path.name != "session.py" or path.parent != root
+        for i, line in enumerate(path.read_text().splitlines(), 1)
+        if setter.search(line)
+    ]
+    assert not offenders, offenders
+
+
+def test_stream_shuffle_partitions_caps_local_master_at_host_cores():
+    """The default session is `local[32]` whatever the host; its state
+    stores must not outnumber the cores that run them. A non-local
+    master keeps its default parallelism."""
+    import os
+    from types import SimpleNamespace
+
+    from mrtweety_analytic_spark.session import stream_shuffle_partitions
+
+    def fake(master, parallelism):
+        return SimpleNamespace(sparkContext=SimpleNamespace(
+            master=master, defaultParallelism=parallelism))
+
+    cores = os.cpu_count()
+    assert stream_shuffle_partitions(fake("local[1]", 1)) == 1
+    assert stream_shuffle_partitions(fake(f"local[{cores}]", cores)) == cores
+    assert stream_shuffle_partitions(
+        fake(f"local[{4 * cores}]", 4 * cores)) == cores
+    assert stream_shuffle_partitions(
+        fake("spark://head:7077", 4 * cores)) == 4 * cores

@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 
 from pyspark.sql import functions as F
 
@@ -356,6 +357,51 @@ def test_sliding_stream_keeps_late_rows_and_pane_state(spark, tmp_path):
     for r, rows in zip(data, files):
         pairs = {(sec // slide, t.lower()) for sec, t in tags_of(rows)}
         assert 0 < r["state_rows_updated"] <= len(pairs), (r, pairs)
+
+
+def test_stream_state_stores_one_per_core(spark, sf_dir):
+    """Streaming half of the session's shuffle-width rule: AQE is off
+    inside micro-batches, so the windowed aggregate's state-store count
+    is `spark.sql.shuffle.partitions`, which the session sets to one per
+    core — not the batch shuffle width."""
+    from mrtweety_analytic_spark.session import stream_shuffle_partitions
+    from mrtweety_analytic_spark.sources import load_events_stream
+
+    events = load_events_stream(spark, sf_dir).select(
+        "ts", F.col("event_type").alias("hashtag")
+    )
+    counts = windowed_counts(
+        events, window="1 day", slide="6 hours", watermark="1 minute"
+    )
+    q = (
+        counts.writeStream.outputMode("update")
+        .format("noop")
+        .trigger(availableNow=True)
+        .start()
+    )
+    assert q.awaitTermination(timeout=300)
+    stores = {
+        s.numStateStoreInstances
+        for p in q.recentProgress
+        for s in p.stateOperators
+    }
+    assert stores == {stream_shuffle_partitions(spark)}
+
+
+def test_batch_shuffle_keeps_initial_partition_num(spark, sf_dir):
+    """Batch half of the rule: with AQE coalescing on, a batch exchange
+    is planned at `initialPartitionNum` (32) whatever
+    `spark.sql.shuffle.partitions` says, and AQE coalesces it at run
+    time."""
+    from mrtweety_analytic_spark.sources import load_table
+
+    df = load_table(spark, sf_dir, "events").groupBy("event_type").count()
+    initial = df._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=false" in initial
+    assert re.search(r"Exchange hashpartitioning\(event_type#\d+, 32\)", initial)
+    assert len(df.collect()) == 5
+    final = df._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in final and "AQEShuffleRead coalesced" in final
 
 
 def test_document_byte_shape_matches_reference_sample():
